@@ -19,7 +19,7 @@ class CatalogAndStreamingSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.catalog.g", "graft.catalog.GraphArCatalog")
-    .config("spark.sql.catalog.g.path", "/root/reference/config/test/data/git/Git.yaml")
+    .config("spark.sql.catalog.g.path", getClass.getResource("/graphar/git/Git.yaml").getPath)
     .getOrCreate()
 
   test("catalog: SHOW TABLES lists vertex and edge tables (attach.test golden)") {

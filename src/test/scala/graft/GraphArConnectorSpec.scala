@@ -7,9 +7,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.graphar.ChunkIO
 
 /** Connector specs mirroring the reference SQLLogicTest golden values
-  * (config/test/sql/graphar/read_vertices.test) against the REAL reference
-  * fixture at /root/reference/config/test/data/git — this proves format
-  * interop, not just self-round-trip.
+  * (config/test/sql/graphar/read_vertices.test) against the in-repo copy of
+  * the reference's trimmed `git` fixture (src/test/resources/graphar/git,
+  * built from FIXTURES.md §1). That copy is not written by graft's own
+  * writer, so this checks reading the reference layout, not a write/read
+  * round trip.
   */
 class GraphArConnectorSpec extends AnyFunSuite {
 
@@ -19,7 +21,7 @@ class GraphArConnectorSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  val gitYaml = "/root/reference/config/test/data/git/Git.yaml"
+  val gitYaml = getClass.getResource("/graphar/git/Git.yaml").getPath
 
   def gitVertices = spark.read.format("graphar")
     .option("path", gitYaml).option("type", "Person").load()
