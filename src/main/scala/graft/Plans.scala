@@ -37,7 +37,7 @@ object Plans {
       "edge_in_seek (IN-set offset seeks; filter stays residual)" ->
         g.edges("Part", "link", "Part")
           .filter(col(meta.GraphArMeta.SrcIndexCol).isin(7L, 42L, 99L)),
-      "two_hop (broadcast frontier)" ->
+      "two_hop (driver-probed frontier: src IN seek + broadcast local frontier)" ->
         g.twoHop("Part", "link", "Part", 42L),
       "q1_agg (pushdown + partial aggregation)" ->
         operators.Relational.queries("q1_agg")(spark, sfDir),

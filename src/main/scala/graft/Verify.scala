@@ -2,10 +2,26 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [name ...]
+  *
+  * With no names every query runs; with names only those run (the fast
+  * inner loop while developing one operator) and oracle_sql.json holds
+  * just their oracle subset, so `scripts/check.py` works unchanged. An
+  * unknown name fails before any query runs. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val sfDir = args(0); val outDir = args(1); val names = args.drop(2).toSeq
+    val all = SparkEntry.queries
+    val unknown = names.filterNot(all.contains)
+    if (unknown.nonEmpty)
+      sys.error(s"unknown query name(s): ${unknown.mkString(", ")}")
+    val queries =
+      if (names.isEmpty) all.toSeq else names.distinct.map(n => n -> all(n))
+    val oracle =
+      if (names.isEmpty) SparkEntry.oracleSql
+      else SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -15,7 +31,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -44,7 +60,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = oracle
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.meta.{EdgeInfo, GraphArMeta, GraphInfo}
+import graft.sources.graphar.GraphArScanBuilder
 
 /** User-facing graph API over a GraphAr graph — ties the connector to the
   * graph operators so a reference user can run every graph query they run
@@ -43,88 +44,66 @@ final case class GraphArGraph(spark: SparkSession, yamlPath: String) {
     GraphOps.oneHop(edgesStd(src, t, dst), vid)
 
   /** Reference `two_hop` semantics (duplicate-preserving, like
-    * [[GraphOps.twoHop]]), with a GraphAr-specific plan: when the
-    * 1-hop frontier is small (≤ `spark.graft.twoHop.seekFrontierMax`,
-    * default 4096 — one vertex's out-neighborhood), its distinct
-    * members are collected and pushed as `src IN (...)` so the second
-    * hop reads O(Σ degree) rows via offset-range seeks instead of
-    * scanning the whole edge table. The broadcast join against the
-    * NON-distinct frontier stays, so multiplicity is identical to the
-    * generic plan (a neighbor reached twice still contributes its
-    * out-edges twice). Oversized frontiers fall back to the generic
-    * broadcast-join plan — the same size-driven strategy call Spark
-    * makes for broadcast vs sort-merge joins. Set the conf to 0 to
-    * disable the seek path. */
+    * [[GraphOps.twoHop]]). When the edge type has an ordered `src`
+    * adjacency list and `vid`'s degree is within the connector's IN-seek
+    * cap, the plan starts from the frontier read driver-side by
+    * [[frontier]] (no Spark job): the single-id seek scan for the first
+    * hop, plus a `src IN distinct(frontier)` seek scan joined to the
+    * broadcast NON-distinct frontier, so a neighbor reached twice still
+    * contributes its out-edges twice. The connector turns a dense IN set
+    * into covering-slice reads of ≈ every chunk, so density needs no
+    * guard here. An out-of-range `vid` yields an empty result. Without
+    * an ordered `src` list, or above the cap, the generic
+    * [[GraphOps.twoHop]] plan runs. */
   def twoHop(src: String, t: String, dst: String, vid: Long): DataFrame = {
     val es = edgesStd(src, t, dst)
-    val cap = spark.conf.getOption("spark.graft.twoHop.seekFrontierMax")
-      .map(_.toInt).getOrElse(4096)
-    if (cap <= 0) return GraphOps.twoHop(es, vid)
-    val e = info.edge(src, t, dst)
-    val alOpt = e.adjList("src").filter(_.ordered)
-    if (alOpt.isEmpty) return GraphOps.twoHop(es, vid)
-    val conf = sessionConf
-    // frontier probe: offset-pair + O(degree) adjacency rows read
-    // driver-side (metadata-class round-trips, NO Spark job — a probe
-    // job would cost more than the pruning saves on a warm local run)
-    val deg = e.offsetPair(alOpt.get, vid, conf)
-      .map { case (b, en) => en - b }.getOrElse(0L)
-    if (deg > cap) return GraphOps.twoHop(es, vid)
-    val ms = e.adjacencyDsts(alOpt.get, vid, conf).getOrElse(Array.empty)
-    val h1 = GraphOps.oneHop(es, vid)
-    if (ms.isEmpty) return h1.select(col("src"), col("dst"))
-    // density guard: F seeks touch ≤2F adjacency chunks, so pruning
-    // only pays when 2F is well under the chunk count — a dense
-    // frontier degrades the seek plan to a full scan plus probe cost
-    // (measured: 133 seeks over an 18-chunk table = no win). Chunk
-    // count comes from edge-count metadata, no data I/O.
-    val totalChunks = math.max(1L,
-      (e.edgeCount(alOpt.get, conf) + e.chunkSize - 1) / e.chunkSize)
-    if (2L * ms.distinct.length >= totalChunks)
-      return GraphOps.twoHop(es, vid)
-    val frontier = broadcast(h1.select(col("dst").as("m")))
-    val second = es.filter(col("src").isin(ms.distinct.toSeq: _*))
-      .join(frontier, col("src") === col("m"))
-      .select(col("src"), col("dst"))
-    h1.select(col("src"), col("dst")).unionAll(second)
+    frontier(src, t, dst, vid).fold(GraphOps.twoHop(es, vid)) { ms =>
+      val h1 = GraphOps.oneHop(es, vid)
+      if (ms.isEmpty) h1
+      else {
+        import spark.implicits._
+        h1.unionAll(es.filter(col("src").isin(ms.distinct.toSeq: _*))
+          .join(broadcast(ms.toSeq.toDF("m")), col("src") === col("m"))
+          .select(col("src"), col("dst")))
+      }
+    }
   }
 
   /** Reference `one_more_hop` semantics (frontier dedup'd; second-hop
     * edges need BOTH endpoints in the frontier, like
-    * [[GraphOps.oneMoreHop]]), with the same guarded seek plan as
-    * [[twoHop]]: a small frontier (probed driver-side from the offset
-    * pair, no Spark job) is pushed as `src IN (...)` so the second hop
-    * reads O(Σ degree) rows via offset-range seeks; the `dst IN`
-    * condition stays a residual filter over those rows. Row multiset is
-    * identical to the generic two-semi-join plan — the IN filters test
-    * exactly membership in the same distinct frontier (`InSeekSpec`
-    * pins it). The frontier cap and density guard are shared with
-    * [[twoHop]] (`spark.graft.twoHop.seekFrontierMax`, 0 disables). */
+    * [[GraphOps.oneMoreHop]]). Same single plan and fallbacks as
+    * [[twoHop]]: the first hop's single-id seek scan plus one
+    * `src IN F AND dst IN F` seek scan over the probed frontier F — no
+    * distinct subplan, no semi-joins. The IN filters test exactly
+    * membership in the same distinct frontier, so the row multiset equals
+    * the generic plan's (`InSeekSpec` pins it). */
   def oneMoreHop(src: String, t: String, dst: String, vid: Long): DataFrame = {
     val es = edgesStd(src, t, dst)
-    val cap = spark.conf.getOption("spark.graft.twoHop.seekFrontierMax")
-      .map(_.toInt).getOrElse(4096)
-    if (cap <= 0) return GraphOps.oneMoreHop(es, vid)
+    frontier(src, t, dst, vid).fold(GraphOps.oneMoreHop(es, vid)) { ms =>
+      val h1 = GraphOps.oneHop(es, vid)
+      val f = ms.distinct.toSeq
+      if (f.isEmpty) h1
+      else h1.unionAll(es.filter(col("src").isin(f: _*) && col("dst").isin(f: _*)))
+    }
+  }
+
+  /** `vid`'s out-neighbors (with multiplicity) read driver-side from the
+    * offset pair and O(degree) adjacency rows — metadata-class reads, no
+    * Spark job. None when the seek plan does not apply: no ordered `src`
+    * adjacency list, or a degree above the connector's IN-seek cap
+    * ([[GraphArScanBuilder.maxInSeek]]). An out-of-range `vid` has an
+    * empty frontier. */
+  private def frontier(src: String, t: String, dst: String,
+                       vid: Long): Option[Array[Long]] = {
     val e = info.edge(src, t, dst)
-    val alOpt = e.adjList("src").filter(_.ordered)
-    if (alOpt.isEmpty) return GraphOps.oneMoreHop(es, vid)
     val conf = sessionConf
-    val deg = e.offsetPair(alOpt.get, vid, conf)
-      .map { case (b, en) => en - b }.getOrElse(0L)
-    if (deg > cap) return GraphOps.oneMoreHop(es, vid)
-    val ms = e.adjacencyDsts(alOpt.get, vid, conf).getOrElse(Array.empty)
-      .distinct
-    val h1 = GraphOps.oneHop(es, vid)
-    if (ms.isEmpty) return h1.select(col("src"), col("dst"))
-    val totalChunks = math.max(1L,
-      (e.edgeCount(alOpt.get, conf) + e.chunkSize - 1) / e.chunkSize)
-    if (2L * ms.length >= totalChunks)
-      return GraphOps.oneMoreHop(es, vid)
-    val msSeq = ms.toSeq
-    val second = es.filter(col("src").isin(msSeq: _*) &&
-      col("dst").isin(msSeq: _*))
-    h1.select(col("src"), col("dst"))
-      .unionAll(second.select(col("src"), col("dst")))
+    e.adjList("src").filter(_.ordered).flatMap { al =>
+      e.offsetPair(al, vid, conf) match {
+        case None => Some(Array.empty[Long])
+        case Some((b, en)) if en - b > GraphArScanBuilder.maxInSeek(spark) => None
+        case Some(range) => Some(e.adjacencyDsts(al, vid, range, conf))
+      }
+    }
   }
 
   /** Per-vertex out-degree WITHOUT scanning edges: pairwise-differences

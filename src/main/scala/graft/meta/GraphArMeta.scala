@@ -102,33 +102,34 @@ final case class EdgeInfo(srcType: String, edgeType: String, dstType: String,
     if (pair.length < 2) None else Some((pair(0), pair(1)))
   }
 
-  /** Driver-side dst ids of ONE vertex's adjacency range — O(degree)
-    * rows via the covering adjacency chunk(s). The metadata-class read
-    * behind [[graft.graph.GraphArGraph.twoHop]]'s frontier probe: no
-    * Spark job, same round-trip class as [[offsetPair]]. None when the
-    * id is outside the aligned vertex range. */
-  def adjacencyDsts(al: GarAdjList, vid: Long,
-                    conf: Configuration): Option[Array[Long]] =
-    offsetPair(al, vid, conf).map { case (begin, end) =>
-      if (begin >= end) Array.empty[Long]
-      else {
-        val cs = chunkSize
-        val part = vid / alignedChunkSize(al)
-        val dstSchema = StructType(Seq(
-          StructField(GraphArMeta.DstIndexCol, LongType, nullable = false)))
-        (begin / cs to (end - 1) / cs).iterator.flatMap { ck =>
-          val lo = math.max(0L, begin - ck * cs).toInt
-          val hi = math.min(cs, end - ck * cs).toInt
-          val it = graft.sources.graphar.ChunkIO.readRows(
-            new Path(s"${adjDir(al)}adj_list/part$part/chunk$ck"),
-            al.fileType, dstSchema, conf)
-          val arr: Array[Long] =
-            try it.slice(lo, hi).map(_(0).asInstanceOf[Long]).toArray
-            finally it.close()
-          arr
-        }.toArray
-      }
+  /** Driver-side dst ids of ONE vertex, given its [[offsetPair]] range
+    * `[begin, end)`: O(degree) rows via the covering adjacency chunk(s),
+    * in adjacency order and with multiplicity. The frontier read behind
+    * [[graft.graph.GraphArGraph.twoHop]] and
+    * [[graft.graph.GraphArGraph.oneMoreHop]]: no Spark job, same
+    * round-trip class as [[offsetPair]]. */
+  def adjacencyDsts(al: GarAdjList, vid: Long, range: (Long, Long),
+                    conf: Configuration): Array[Long] = {
+    val (begin, end) = range
+    if (begin >= end) Array.empty[Long]
+    else {
+      val cs = chunkSize
+      val part = vid / alignedChunkSize(al)
+      val dstSchema = StructType(Seq(
+        StructField(GraphArMeta.DstIndexCol, LongType, nullable = false)))
+      (begin / cs to (end - 1) / cs).iterator.flatMap { ck =>
+        val lo = math.max(0L, begin - ck * cs).toInt
+        val hi = math.min(cs, end - ck * cs).toInt
+        val it = graft.sources.graphar.ChunkIO.readRows(
+          new Path(s"${adjDir(al)}adj_list/part$part/chunk$ck"),
+          al.fileType, dstSchema, conf)
+        val arr: Array[Long] =
+          try it.slice(lo, hi).map(_(0).asInstanceOf[Long]).toArray
+          finally it.close()
+        arr
+      }.toArray
     }
+  }
 
   /** Batched [[offsetPair]] for a SORTED id set (the IN-seek shape):
     * one covering read per offset chunk instead of one file open per

@@ -205,6 +205,20 @@ class GraphArEdgeTable(val info: EdgeInfo) extends GraphArTable {
     new GraphArScanBuilder(Right(info))
 }
 
+object GraphArScanBuilder {
+  /** Seek-set cap for `id IN (...)` pushdown
+    * (`spark.graft.seek.maxInValues`, default 4096): above it a full scan
+    * is usually cheaper than per-value offset reads (each IN value costs
+    * one driver-side offset-pair read — an object-store round-trip at
+    * cluster scale), so the filter stays residual-only and the scan
+    * stays a full scan. The hop plans of
+    * [[graft.graph.GraphArGraph]] read the same bound, so a frontier they
+    * push as `IN` is never above it. */
+  def maxInSeek(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.conf.getOption("spark.graft.seek.maxInValues").map(_.toInt)
+      .getOrElse(4096)
+}
+
 /** Pushdown state: like the reference, a single equality filter on a
   * synthetic index column prunes I/O (read_base.hpp:281-304 parses exactly
   * one `col = const`). Property predicates (P3, read_vertices.cpp:109-114)
@@ -231,14 +245,8 @@ class GraphArScanBuilder(info: Either[VertexInfo, EdgeInfo])
   private var limit: Option[Int] = None
   private var countStarPushed = false
 
-  /** Seek-set cap for `id IN (...)` pushdown: above it a full scan is
-    * usually cheaper than per-value offset reads (each IN value costs
-    * one driver-side offset-pair read — an object-store round-trip at
-    * cluster scale), so the filter stays residual-only and the scan
-    * stays a full scan. */
   private val maxInSeek: Int =
-    org.apache.spark.sql.SparkSession.active.conf
-      .getOption("spark.graft.seek.maxInValues").map(_.toInt).getOrElse(4096)
+    GraphArScanBuilder.maxInSeek(org.apache.spark.sql.SparkSession.active)
 
   private val syntheticCols = Set(GraphArMeta.VertexIndexCol,
     GraphArMeta.SrcIndexCol, GraphArMeta.DstIndexCol)
