@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Run graft.Bench (or any graft main, $BENCH_MAIN) in a plain cold java
-# JVM against a snapshot of the compiled classes — same pattern as
-# zipf_isolated_java.sh: keeps sbt's lock free and gives a fresh JVM so
+# JVM against a snapshot of the compiled classes (zipf_isolated_java.sh
+# runs each query through it): keeps sbt's lock free and gives a fresh JVM so
 # measurements are not contaminated by sbt's own heap. Snapshot is
 # refreshed on every invocation unless SKIP_SNAPSHOT=1.
 #

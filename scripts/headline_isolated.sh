@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Fresh-JVM isolation runs of the 8 BASELINE.md headline queries on the
-# ~58M-edge replicated GraphAr fixture (HeadlineScaleBench): one forked
+# ~58M-edge replicated GraphAr fixture (ScaleBench headline): one forked
 # Spark JVM per query, so each number is free of prior queries' heap
 # pressure / GC state / shuffle-file cache (the SCALE.md round-6
 # contamination lesson). The fixture is built once by the first
@@ -15,7 +15,7 @@ export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-64g}"
 
 run_one() { # label reps
   echo "=== isolated $1 (x${R} replicas, reps=$2) ===" | tee -a "$LOG"
-  sbt -batch "runMain graft.HeadlineScaleBench $R $2 only=$1" 2>&1 \
+  sbt -batch "runMain graft.ScaleBench headline $R $2 only=$1" 2>&1 \
     | grep -E "^HEADLINE" | tee -a "$LOG"
 }
 

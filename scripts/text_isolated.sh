@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # Fresh-JVM isolation runs of the text/retrieval scale rung
-# (TextScaleBench): one forked Spark JVM per op. The corpus and the
+# (ScaleBench text): one forked Spark JVM per op. The corpus and the
 # postings index are marker-/state-cached in /tmp between JVMs, so the
 # maintenance sequence (append → delta probes → compact → vacuum →
 # post-compact probe) carries its on-disk state across invocations in
@@ -18,7 +18,7 @@ export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-64g}"
 
 run_one() { # label reps
   echo "=== isolated $1 (${M}M docs, reps=$2) ===" | tee -a "$LOG"
-  sbt -batch "runMain graft.TextScaleBench $M $2 only=$1" 2>&1 \
+  sbt -batch "runMain graft.ScaleBench text $M $2 only=$1" 2>&1 \
     | grep -E "^TEXTSCALE" | tee -a "$LOG"
 }
 

@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
-# Fresh-JVM isolation runs of the Zipf stress queries: one forked Spark
-# JVM per query (run/fork := true), so iterative ops are measured
-# without prior queries' heap pressure, GC state, or shuffle-file cache.
+# Fresh-JVM isolation runs of the Zipf stress queries (ScaleBench zipf):
+# one forked Spark JVM per query (run/fork := true), so iterative ops are
+# measured without prior queries' heap pressure, GC state, or
+# shuffle-file cache.
 # SCALE.md round-6 flagged the contamination: katz measured 282 s after
 # a cold-start suite vs 40 s standalone in the shared-JVM runs.
 #
@@ -24,7 +25,7 @@ export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-64g}"
 
 run_one() { # label reps extra_flag
   echo "=== isolated $1 (${M}M edges, reps=$2) ===" | tee -a "$LOG"
-  sbt -batch "runMain graft.ZipfBench $M $2 ${3:-} only=$1" 2>&1 \
+  sbt -batch "runMain graft.ScaleBench zipf $M $2 ${3:-} only=$1" 2>&1 \
     | grep -E "^ZIPF|graft-converged" | tee -a "$LOG"
 }
 

@@ -1,9 +1,10 @@
 #!/usr/bin/env bash
 # Fresh-JVM isolation runs of the Zipf stress queries — java variant.
-# One plain `java` process per query against a SNAPSHOT of the compiled
-# classes (taken once at launch), so (a) each query gets a genuinely
-# cold JVM with no prior heap/GC/code-cache/shuffle-file state, and
-# (b) sbt's project lock stays free for concurrent development.
+# One plain `java` process per query (scripts/bench_java.sh running
+# graft.ScaleBench zipf) against a SNAPSHOT of the compiled classes
+# (taken once at launch), so (a) each query gets a genuinely cold JVM
+# with no prior heap/GC/code-cache/shuffle-file state, and (b) sbt's
+# project lock stays free for concurrent development.
 #
 # Usage: scripts/zipf_isolated_java.sh <edgesMillions> [out_log]
 # Fixture (+ cached hub/mid anchors) is built by the first invocation.
@@ -13,32 +14,15 @@ set -u
 M="${1:-60}"
 LOG="${2:-/tmp/zipf_isolated_${M}m.log}"
 cd "$(dirname "$0")/.."
-MEM="${SPARK_DRIVER_MEM:-64g}"
-SNAP=/tmp/graft_classes_snapshot
-rm -rf "$SNAP"; mkdir -p "$SNAP"
-cp -r target/scala-2.13/classes/* "$SNAP/"
-CP="$SNAP:$(echo /opt/spark/jars/*.jar | tr ' ' ':')"
-JAVA_OPTS="-Xmx$MEM -XX:+UseG1GC \
-  --add-opens=java.base/java.lang=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
-  --add-opens=java.base/java.io=ALL-UNNAMED \
-  --add-opens=java.base/java.net=ALL-UNNAMED \
-  --add-opens=java.base/java.nio=ALL-UNNAMED \
-  --add-opens=java.base/java.util=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent=ALL-UNNAMED \
-  --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED \
-  --add-opens=java.base/jdk.internal.ref=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.ch=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.cs=ALL-UNNAMED \
-  --add-opens=java.base/sun.security.action=ALL-UNNAMED \
-  --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
+SNAPPED=0
 
-run_one() { # label reps extra_flag
+run_one() { # label reps extra_flags
   echo "=== isolated $1 (${M}M edges, reps=$2) ===" | tee -a "$LOG"
   # shellcheck disable=SC2086
-  java $JAVA_OPTS -cp "$CP" graft.ZipfBench "$M" "$2" ${3:-} "only=$1" 2>&1 \
+  BENCH_MAIN=graft.ScaleBench SKIP_SNAPSHOT="$SNAPPED" \
+    scripts/bench_java.sh zipf "$M" "$2" ${3:-} "only=$1" 2>&1 \
     | grep -E "^ZIPF" | tee -a "$LOG"
+  SNAPPED=1
 }
 
 : > "$LOG"

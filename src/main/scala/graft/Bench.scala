@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.graph.{GraphArGraph, GraphOps, GraphQueries}
@@ -23,21 +22,42 @@ import graft.graph.{GraphArGraph, GraphOps, GraphQueries}
   * sum of medians. Fixture build time is reported separately as
   * `fixture_build` — it is ETL, not query time, and runs once (it
   * writes the on-disk graph; a repeat would measure an overwrite).
+  *
+  * `Bench sweep <sfDir> <name|all> [name ...]` instead times declared
+  * queries through the noop sink (see [[sweep]]).
   */
 object Bench {
   private final case class Res(median: Double, min: Double, n: Int)
 
-  def main(args: Array[String]): Unit = {
+  sealed trait Mode
+  /** No arguments: the headline queries, one JSON line. */
+  case object Headline extends Mode
+  /** `sweep <sfDir> <name|all> ...`: declared queries through the noop
+    * sink, one line per rep plus a median summary. */
+  final case class Sweep(sfDir: String, names: Seq[String]) extends Mode
+
+  private val Usage = "usage: Bench | Bench sweep <sfDir> <name|all> [name ...]"
+
+  /** Pure argument parsing: an unknown query name fails here, before
+    * any session is built. */
+  def parse(args: Seq[String]): Mode = args match {
+    case Seq() => Headline
+    case Seq("sweep", sfDir, names @ _*) if names.nonEmpty =>
+      val list = if (names == Seq("all")) SparkEntry.queries.keys.toSeq.sorted
+        else names
+      SparkEntry.requireKnown(list)
+      Sweep(sfDir, list)
+    case _ => throw new IllegalArgumentException(Usage)
+  }
+
+  def main(args: Array[String]): Unit = parse(args.toSeq) match {
+    case Headline => headline()
+    case Sweep(sfDir, names) => sweep(sfDir, names)
+  }
+
+  private def headline(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(logLevel = "WARN")
 
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Res]
 
@@ -161,6 +181,43 @@ object Bench {
     }
 
     emit(results, sfDir, spark.sparkContext.defaultParallelism >= 32)
+    spark.stop()
+  }
+
+  /** The sweep measurement: each query through the noop sink (computes
+    * every column of every row, collects nothing), with warm-up reps
+    * and repeated timed reps. Env: SWEEP_REPS (default 3), SWEEP_WARMUP
+    * (default 1), SWEEP_CLEAR_CACHE (default 1: clear the CacheManager
+    * between reps so each rep pays its own cache builds), SWEEP_CONF. */
+  private def sweep(sfDir: String, names: Seq[String]): Unit = {
+    val reps = sys.env.getOrElse("SWEEP_REPS", "3").toInt
+    val warmup = sys.env.getOrElse("SWEEP_WARMUP", "1").toInt
+    val clear = sys.env.getOrElse("SWEEP_CLEAR_CACHE", "1") == "1"
+    val spark = Harness.session(logLevel = "WARN", conf = Harness.envConf)
+    names.foreach { name =>
+      val fn = SparkEntry.queries(name)
+      val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+      var i = 0
+      var failed: String = null
+      while (i < warmup + reps && failed == null) {
+        if (clear) spark.catalog.clearCache()
+        spark.sparkContext.setJobDescription(s"sweep:$name rep $i")
+        val t0 = System.nanoTime()
+        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        catch { case e: Throwable => failed = e.getMessage }
+        val dt = (System.nanoTime() - t0) / 1e9
+        if (failed == null) {
+          if (i >= warmup) times += dt
+          println(f"[sweep] $name rep $i: $dt%.3f s")
+        }
+        i += 1
+      }
+      if (failed != null) println(s"[sweep] $name FAILED: $failed")
+      else {
+        val s = times.sorted
+        println(f"[sweep] $name MEDIAN ${s(s.length / 2)}%.3f s MIN ${s.head}%.3f (n=${s.length})")
+      }
+    }
     spark.stop()
   }
 

@@ -3,25 +3,43 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 
 /** Regenerates `docs/PLANS.md` — the executed-plan artifact backing the
   * scale-design claims in README.md. Run after any change that could
   * move a plan: `sbt "runMain graft.Plans [sfDir] [outPath]"`.
+  *
+  * `Plans dump <sfDir> <outDir> <suffix> <name> [name ...]` instead
+  * writes the plan evidence of declared queries (see [[dump]]).
   */
 object Plans {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val out = if (args.length > 1) args(1) else "docs/PLANS.md"
-    val spark = SparkSession.builder()
-      .appName("graft-plans").master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  sealed trait Mode
+  final case class Regenerate(sfDir: String, out: String) extends Mode
+  final case class Dump(sfDir: String, outDir: String, suffix: String,
+                        names: Seq[String]) extends Mode
+
+  /** Pure argument parsing: an unknown query name fails here, before
+    * any session is built. */
+  def parse(args: Seq[String]): Mode = args match {
+    case Seq("dump", sfDir, outDir, suffix, names @ _*) if names.nonEmpty =>
+      SparkEntry.requireKnown(names)
+      Dump(sfDir, outDir, suffix, names)
+    case Seq("dump", _*) => throw new IllegalArgumentException(
+      "usage: Plans dump <sfDir> <outDir> <suffix> <name> [name ...]")
+    case _ => Regenerate(args.headOption.getOrElse("/root/testdata/sf0.01"),
+      if (args.length > 1) args(1) else "docs/PLANS.md")
+  }
+
+  def main(args: Array[String]): Unit = parse(args.toSeq) match {
+    case Regenerate(sfDir, out) => regenerate(sfDir, out)
+    case d: Dump => dump(d)
+  }
+
+  private def regenerate(sfDir: String, out: String): Unit = {
+    val spark = Harness.session(cores = 8)
 
     val yaml = sources.graphar.GraphArQueries.fixture(spark, sfDir)
     val g = graph.GraphArGraph(spark, yaml)
@@ -253,6 +271,49 @@ object Plans {
     }
     Files.write(Paths.get(out), sb.toString.getBytes(StandardCharsets.UTF_8))
     println(s"PLANS written to $out (${sections.size} sections)")
+    spark.stop()
+  }
+
+  /** For each named declared query, writes `<outDir>/<name>_<suffix>.txt`
+    * with (a) the returned frame's formatted plan and (b) every EXECUTED
+    * plan observed while building and running the query through the
+    * noop sink — the loop-based operators (pageRank, kTruss, …)
+    * materialize per-round frames during build, so their interesting
+    * plans (join strategy inside a round) only show up here, not in the
+    * final frame's explain. Env: SWEEP_CONF. */
+  private def dump(d: Dump): Unit = {
+    val spark = Harness.session(conf = Harness.envConf)
+    new java.io.File(d.outDir).mkdirs()
+
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        captured.add(s"-- executed [$funcName] --\n" +
+          qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    })
+
+    d.names.foreach { name =>
+      captured.clear()
+      val df = SparkEntry.queries(name)(spark, d.sfDir)
+      val finalPlan = df.queryExecution.explainString(
+        ExplainMode.fromString("formatted"))
+      df.write.format("noop").mode("overwrite").save()
+      Thread.sleep(2000) // listener bus is async
+      val sb = new StringBuilder
+      sb.append(s"== $name (${d.suffix}) — final frame, explain(formatted) ==\n")
+      sb.append(finalPlan).append('\n')
+      sb.append("== executed plans observed during build + noop run ==\n")
+      val it = captured.iterator()
+      var i = 0
+      while (it.hasNext && i < 200) { sb.append(it.next()).append('\n'); i += 1 }
+      if (it.hasNext) sb.append("... (truncated at 200 executed plans)\n")
+      Files.write(Paths.get(d.outDir, s"${name}_${d.suffix}.txt"),
+        sb.toString.getBytes(StandardCharsets.UTF_8))
+      println(s"[plandump] wrote ${name}_${d.suffix}.txt")
+    }
     spark.stop()
   }
 }

@@ -40,4 +40,11 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     modules.iterator.map(_._2).reduce(_ ++ _)
+
+  /** Fails on any name that is not a key of [[queries]]; the entry
+    * points call it while parsing, before a session is built. */
+  def requireKnown(names: Seq[String]): Unit = {
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+  }
 }

@@ -92,36 +92,18 @@ object Tables {
   def inputBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
 
-  /** Input-size thresholds above which a multi-consumer derived table
-    * is materialized EAGERLY once instead of lazily re-derived per
-    * consumer (VERDICT r12 item 5). Measured per operator at sf0.1 and
-    * the 0.2M/2M-doc synthetic text rungs (OPTIMIZATION_r13.md):
-    *
-    *  - PMI pair table: eager WINS from tens of MB of input (26 MB: 3×,
-    *    259 MB: 2× — four consumers each re-ran the tokenize+pair
-    *    aggregation) and is ~neutral at sf0.1 → default 4 MiB.
-    *  - BM25 postings: lazy WINS at every measured size (2M docs: 16.7 s
-    *    lazy vs 23.3 s eager — the qpost arm's query-term pushdown beats
-    *    materializing the full posting table; past ad-hoc scale the
-    *    answer is the STORED index) → default off.
-    *  - co-occurrence pair scores: lazy wins at every local size
-    *    (sf0.1: 2.1 s vs 2.9 s); no local fixture reaches the
-    *    crossover → default off, conf provided for cluster tuning.
-    *
-    * Below the threshold the lazy plan keeps its dead plan-build-time
-    * pin (marking the subtree a warehouse would pin as a TABLE); at or
-    * above, one eager localCheckpoint is shared by every consumer. */
+  /** Input size from which the PMI pair table is materialized EAGERLY
+    * once instead of lazily re-derived per consumer (VERDICT r12 item
+    * 5). Measured at sf0.1 and the 0.2M/2M-doc synthetic text rungs
+    * (OPTIMIZATION_r13.md): eager WINS from tens of MB of input (26 MB:
+    * 3×, 259 MB: 2× — four consumers each re-ran the tokenize+pair
+    * aggregation) and is ~neutral at sf0.1 → default 4 MiB. The same
+    * guard lost at every measured size for BM25 postings (2M docs:
+    * 16.7 s lazy vs 23.3 s eager) and co-occurrence pair scores (sf0.1:
+    * 2.1 s vs 2.9 s), so those two always run lazily. */
   def pairTableMinInputBytes(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.pairTable.minInputBytes")
       .map(_.toLong).getOrElse(4L << 20)
-
-  def postingsMinInputBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.postings.minInputBytes")
-      .map(_.toLong).getOrElse(Long.MaxValue)
-
-  def cooccurMinInputBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.cooccur.minInputBytes")
-      .map(_.toLong).getOrElse(Long.MaxValue)
 
   /** The events table's `ts` column has shipped in two parquet
     * encodings across fixture generations: TIMESTAMP(NANOS) (which the

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -13,23 +12,14 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1); val names = args.drop(2).toSeq
+    SparkEntry.requireKnown(names)
     val all = SparkEntry.queries
-    val unknown = names.filterNot(all.contains)
-    if (unknown.nonEmpty)
-      sys.error(s"unknown query name(s): ${unknown.mkString(", ")}")
     val queries =
       if (names.isEmpty) all.toSeq else names.distinct.map(n => n -> all(n))
     val oracle =
       if (names.isEmpty) SparkEntry.oracleSql
       else SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -438,7 +438,7 @@ object GraphQueries {
     // min-(w,a,b) pick per component plus a recursive-closure
     // contraction — and the distinct (w,a,b) total order makes the
     // forest unique, so hashes match. The FULL-graph run stays in
-    // ZipfBench (105 s at Zipf 60M) and the Kruskal spec (MstSpec).
+    // `ScaleBench zipf` (105 s at Zipf 60M) and the Kruskal spec (MstSpec).
     "g_mst" -> { (s, d) =>
       GraphOps.minimumSpanningForest(s,
         edgesFrom(s, d)

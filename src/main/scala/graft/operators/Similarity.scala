@@ -1353,7 +1353,7 @@ object Similarity {
     * count-star per probe set, pruned by the same static partition
     * filters the probe itself plans; never a full-index scan). The
     * default coverage 1/8 reaches ≥0.7 recall@10 on the 2M
-    * planted-cluster rung (RecallProbe auto run, docs/SCALE.md
+    * planted-cluster rung (the auto-width run in docs/SCALE.md
     * round-12); `cap` bounds refine cost on degenerate population
     * skew — raise it for recall-critical serving, it is a cost
     * ceiling, not a tuning constant. */

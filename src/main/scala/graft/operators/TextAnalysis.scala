@@ -150,16 +150,14 @@ object TextAnalysis {
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
     // Size-guarded pin (VERDICT r12 item 5): four consumers (c1, c2, n,
     // scored) re-derive this pair aggregation lazily — measured FASTER
-    // at gate scale (per-consumer pushdown, no materialization write),
-    // so below the guard the pin stays the documented dead marker. At
-    // or above `spark.graft.pairTable.minInputBytes` of input, one
+    // at gate scale (per-consumer pushdown, no materialization write).
+    // At or above `spark.graft.pairTable.minInputBytes` of input, one
     // eager checkpoint replaces four tokenize+aggregate passes.
-    val eagerPin = graft.Tables.inputBytes(docs) >=
-      graft.Tables.pairTableMinInputBytes(docs.sparkSession)
     val c12base = pairs.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c12"))
-    val c12 = if (eagerPin) c12base.localCheckpoint(true)
-      else c12base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val c12 = if (graft.Tables.inputBytes(docs) >=
+        graft.Tables.pairTableMinInputBytes(docs.sparkSession))
+      c12base.localCheckpoint(true) else c12base
     val c1 = c12.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
     val c2 = c12.groupBy(col("w2")).agg(sum(col("c12")).as("c2"))
     val n = c12.agg(sum(col("c12")).as("n_pairs"))
@@ -171,14 +169,12 @@ object TextAnalysis {
           ((col("c12").cast("double") * col("n_pairs").cast("double")) /
             (col("c1").cast("double") * col("c2").cast("double"))))
           .cast("long"))
-    val res = scored
+    scored
       .orderBy(col("pmi_micro").desc, col("w1"), col("w2")).limit(topN)
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(col("pmi_micro").desc, col("w1"), col("w2"))).cast("long"))
       .select(col("rank"), col("w1"), col("w2"), col("c12"), col("pmi_micro"))
-    if (!eagerPin) c12.unpersist(blocking = false)
-    res
   }
 
   /** Interpolated bigram-LM document scoring — the bigram cousin of the

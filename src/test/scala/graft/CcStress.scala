@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.graph.GraphOps
 
 /** Diagnostic stress loop for the component/community operators against
@@ -14,12 +12,7 @@ object CcStress {
   def main(args: Array[String]): Unit = {
     val iters = args.headOption.map(_.toInt).getOrElse(300)
     val seed0 = if (args.length > 1) args(1).toLong else 12345L
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(cores = 2)
     import spark.implicits._
     val rnd = new scala.util.Random(seed0)
     var failures = 0

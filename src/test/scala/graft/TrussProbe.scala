@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.graph.{GraphOps, GraphQueries}
 
 /** Diagnostic: k-truss size + peel convergence on the oracle fixture
@@ -14,12 +12,7 @@ object TrussProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val ks = if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(8, 12, 16, 20)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val edges = GraphQueries.edgesFrom(spark, sfDir)
     ks.foreach { k =>
       val rounds = (1 to 7).map { r =>
