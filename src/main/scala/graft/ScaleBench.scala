@@ -39,6 +39,28 @@ object ScaleBench {
       s"usage: ScaleBench <${Rungs.keys.toSeq.sorted.mkString("|")}> [args] [only=<label>]")
   }
 
+  /** Whether the text rung builds its BPE merge table: only the
+    * `bpe_encode_*` labels read it. */
+  def needsMergeTable(only: Option[String]): Boolean =
+    only.forall(_.startsWith("bpe_encode_"))
+
+  /** The vector rung's one-shot steps each label needs run first: a
+    * stored probe reads the index a build wrote, and the maintenance
+    * probes read the appended (and compacted) IVF-PQ index. Labels
+    * outside the map (brute force, recall) need none. */
+  private val VectorNeeds: Map[String, Seq[String]] = {
+    val ivfpq = Seq("ivfpq_build", "ivfpq_append_1pct", "ivfpq_compact")
+    Map("ivf_build" -> Seq("ivf_build"), "ivf_stored_probe" -> Seq("ivf_build"),
+      "ivfpq_build" -> ivfpq.take(1), "ivfpq_stored_probe" -> ivfpq.take(1),
+      "ivfpq_append_1pct" -> ivfpq.take(2), "ivfpq_probe_with_delta" -> ivfpq.take(2),
+      "ivfpq_compact" -> ivfpq, "ivfpq_probe_compacted" -> ivfpq)
+  }
+
+  /** The vector rung's one-shot steps that run: all of them, or the ones
+    * the `only=` label needs. */
+  def vectorSteps(only: Option[String]): Set[String] =
+    only.fold(VectorNeeds.values.flatten.toSet)(l => VectorNeeds.getOrElse(l, Nil).toSet)
+
   def main(args: Array[String]): Unit = {
     val cmd = parse(args.toSeq)
     val spark = Harness.session()
@@ -332,24 +354,19 @@ object ScaleBench {
     // dominate) and flat-ish in merge count (each +32 merges is one
     // more VOCAB-sized pass, invisible next to the corpus term) —
     // the claim that removed bpeEncodedCounts' expression ceiling
-    val tMt = System.nanoTime()
-    val mergeTable = Pipeline.frequencyMergeTable(docs).localCheckpoint()
-    val nMerges = mergeTable.count() // materialize OUTSIDE the rungs:
-    // the artifact build (vocab substring ranking) is one-time
-    // tokenizer work, not per-encode cost
-    println(f"TEXTSCALE merge_table_build one=${(System.nanoTime() - tMt) / 1e9}%.3f rows=$nMerges")
-    time("bpe_encode_128")(
-      Pipeline.bpeEncodedCountsStored(docs,
-        mergeTable.filter(col("rank") <= 128))
-        .agg(sum(col("n_subtokens"))).collect())
-    time("bpe_encode_512")(
-      Pipeline.bpeEncodedCountsStored(docs,
-        mergeTable.filter(col("rank") <= 512))
-        .agg(sum(col("n_subtokens"))).collect())
-    time("bpe_encode_1024")(
-      Pipeline.bpeEncodedCountsStored(docs,
-        mergeTable.filter(col("rank") <= 1024))
-        .agg(sum(col("n_subtokens"))).collect())
+    if (needsMergeTable(only)) {
+      val tMt = System.nanoTime()
+      val mergeTable = Pipeline.frequencyMergeTable(docs).localCheckpoint()
+      val nMerges = mergeTable.count() // materialize OUTSIDE the rungs:
+      // the artifact build (vocab substring ranking) is one-time
+      // tokenizer work, not per-encode cost
+      println(f"TEXTSCALE merge_table_build one=${(System.nanoTime() - tMt) / 1e9}%.3f rows=$nMerges")
+      Seq(128, 512, 1024).foreach { k =>
+        time(s"bpe_encode_$k")(
+          Pipeline.bpeEncodedCountsStored(docs, mergeTable.filter(col("rank") <= k))
+            .agg(sum(col("n_subtokens"))).collect())
+      }
+    }
 
     docs.unpersist(blocking = false)
   }
@@ -415,15 +432,17 @@ object ScaleBench {
 
     // builds are single-shot (they overwrite state; rep 2 would
     // measure an overwrite of a hot page cache) — reps=1 semantics
-    // via fresh dirs per run is overkill; report the one-shot number
-    def one(label: String)(f: => Any): Unit = {
+    // via fresh dirs per run is overkill; report the one-shot number.
+    // Under only=, a step runs only when the selected label needs it.
+    val steps = vectorSteps(only)
+    def one(label: String)(f: => Any): Unit = if (steps(label)) {
       val t0 = System.nanoTime(); f
       println(f"VECSCALE $label one=${(System.nanoTime() - t0) / 1e9}%.3f")
     }
     one("ivf_build")(Similarity.writeIvfIndex(emb, ivfDir, modulo.toInt))
     one("ivfpq_build")(Similarity.writeIvfPqIndex(emb, ivfpqDir, modulo.toInt))
-    println(s"VECSCALE ivf_vectors_bytes=${sizeOf(s"$ivfDir/vectors")}")
-    println(s"VECSCALE ivfpq_codes_bytes=${sizeOf(s"$ivfpqDir/codes")}")
+    if (steps("ivf_build")) println(s"VECSCALE ivf_vectors_bytes=${sizeOf(s"$ivfDir/vectors")}")
+    if (steps("ivfpq_build")) println(s"VECSCALE ivfpq_codes_bytes=${sizeOf(s"$ivfpqDir/codes")}")
 
     time("brute_topk")(
       Similarity.bruteForceTopK(emb, col("vec_id") < 8, 10).count())

@@ -1,8 +1,11 @@
 package graft.sources.graphar
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, countDistinct, lit}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max, regexp_extract}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.meta.GraphArMeta
 import graft.streaming.GraphArSink
@@ -22,8 +25,8 @@ import graft.streaming.GraphArSink
   * the API is batch-amortized by design — accumulate a day's deltas and
   * commit once, exactly how immutable-layout tables (Iceberg/Delta
   * without manifests) handle churn. The rewrite itself is the writer's
-  * distributed CSR sort (`repartitionAndSortWithinPartitions`, one task
-  * per vertex-chunk part, optional task packing), and the union/anti
+  * distributed CSR sort (a Kryo-serialized keyed shuffle, one task per
+  * vertex-chunk part, optional task packing), and the union/anti
   * inputs shuffle only (src, dst, props) rows.
   *
   * ==Single-writer contract==
@@ -291,7 +294,7 @@ object GraphArMutations {
 
   /** Reconstruct the writer spec of an existing edge table. */
   private def specOf(e: graft.meta.EdgeInfo,
-                     conf: org.apache.hadoop.conf.Configuration,
+                     conf: Configuration,
                      newVertexCount: Option[Long]): GraphArWriter.EdgeSpec = {
     // the single count grows BOTH sides — only sound when src and dst
     // share one vertex space; on a bipartite type it would silently
@@ -319,7 +322,7 @@ object GraphArMutations {
     * the non-indented `prefix:` line always exists.
     */
   private def referenceYaml(from: Path, to: Path, dataDir: String,
-                            conf: org.apache.hadoop.conf.Configuration): Unit = {
+                            conf: Configuration): Unit = {
     val fs = from.getFileSystem(conf)
     val in = fs.open(from)
     val text = try {
@@ -483,18 +486,16 @@ object GraphArMutations {
     // an uninitialized base would otherwise commit a delta that poisons
     // the log the moment initEdges creates v0
     val e = resolveEdge(spark, base, edgeName, conf)
-    // fail at STAGE time, not at the eventual fold: an adds frame whose
-    // columns don't match the snapshot's edge schema would otherwise
-    // poison the log and break every later currentEdges/compactDeltas
-    adds.foreach { df =>
-      val want = Set("src", "dst") ++ e.propertyGroups.flatMap(_.properties.map(_.name))
-      val got = df.columns.toSet
-      require(got == want,
-        s"delta adds columns ${got.mkString("(", ", ", ")")} don't match " +
-          s"the edge schema ${want.mkString("(", ", ", ")")}")
-    }
+    // fail at STAGE time, not at the eventual fold: adds or keys whose
+    // columns don't match the snapshot's edge schema, or whose types
+    // don't widen to it, would otherwise poison the log and break every
+    // later currentEdges/compactDeltas; the files are written in the
+    // snapshot's types, so the fold reads them without inference
+    val addsRows = adds.map(conformTo(_, edgeSchema(e), "delta adds", "edge schema"))
+    val removeRows = removeKeys.map(k =>
+      conformTo(k.select(col("src"), col("dst")), KeySchema, "delta removeKeys", "edge key"))
     val root = deltaRoot(base, edgeName)
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
+    val fs = new Path(root).getFileSystem(conf)
     val committed = stagedDeltasIn(spark, root)
     // explicit seq = idempotency key (streaming replay: a micro-batch
     // re-delivered after a failure must not stage twice). The staged-dir
@@ -514,13 +515,12 @@ object GraphArMutations {
     // a stage that crashed before its _COMMITTED marker leaves stale
     // adds/removes files; writing over the dir piecemeal would make the
     // crashed half visible alongside the new one — start clean
-    if (fs.exists(new org.apache.hadoop.fs.Path(dir)))
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-    adds.foreach(_.write.mode("overwrite").parquet(s"$dir/adds"))
-    removeKeys.foreach(_.select(col("src"), col("dst")).distinct()
-      .write.mode("overwrite").parquet(s"$dir/removes"))
+    if (fs.exists(new Path(dir)))
+      fs.delete(new Path(dir), true)
+    addsRows.foreach(_.write.mode("overwrite").parquet(s"$dir/adds"))
+    removeRows.foreach(_.distinct().write.mode("overwrite").parquet(s"$dir/removes"))
     writeBaseVersion(spark, base, dir, conf)
-    fs.create(new org.apache.hadoop.fs.Path(s"$dir/_COMMITTED"), true).close()
+    fs.create(new Path(s"$dir/_COMMITTED"), true).close()
     // watermark AFTER _COMMITTED: a crash in between leaves the dir
     // visible, so the committed-seq check still deduplicates the replay;
     // the reverse order would mark an unstaged batch as applied (loss)
@@ -532,19 +532,20 @@ object GraphArMutations {
   /** Auto-compaction: when the LIVE staged-delta count reaches
     * `spark.graft.maxStagedDeltas` (default 32; <= 0 disables), fold the
     * log into one snapshot right after the stage that crossed the line.
-    * Each staged delta adds a union + anti-join on top of every
-    * `currentEdges` plan — and the delta side has no CSR seek — so an
-    * unbounded log silently degrades reads; this bounds it.
+    * A folded read is one plan whatever the log length, so the cap
+    * bounds the log's SIZE — the delta rows every read scans beside the
+    * snapshot without a CSR seek, and the dirs each read lists — not a
+    * per-delta plan cost.
     */
   private def maybeAutoCompact(spark: SparkSession, base: String,
                                edgeName: Option[String], root: String,
                                e: graft.meta.EdgeInfo,
-                               conf: org.apache.hadoop.conf.Configuration): Unit = {
+                               conf: Configuration): Unit = {
     val cap = spark.conf.getOption("spark.graft.maxStagedDeltas")
       .map(_.toInt).getOrElse(32)
     if (cap <= 0) return
-    val live = liveDeltasIn(spark, root, rewriteVersionOf(e.dir), conf)
-    if (live.size >= cap) compactDeltasIn(spark, base, edgeName, None)
+    if (liveDeltasIn(root, rewriteVersionOf(e.dir), conf).size >= cap)
+      compactDeltasIn(spark, base, edgeName, None)
   }
 
   // -------------------------------------------------- replay watermark
@@ -555,16 +556,19 @@ object GraphArMutations {
   // outlives the dirs. Written with the same tmp + atomic-overwrite-
   // rename protocol as LATEST, so readers never observe a partial file.
 
-  private def maxSeqOf(root: String,
-                       conf: org.apache.hadoop.conf.Configuration): Option[Long] = {
+  private def maxSeqOf(root: String, conf: Configuration): Option[Long] = {
     val p = new Path(s"$root/_MAX_SEQ")
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
+    if (!p.getFileSystem(conf).exists(p)) None
+    else scala.util.Try(readText(p, conf).trim.toLong).toOption
+  }
+
+  /** A small marker file's UTF-8 text. */
+  private def readText(p: Path, conf: Configuration): String = {
+    val in = p.getFileSystem(conf).open(p)
     try {
       val out = new java.io.ByteArrayOutputStream()
       org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
-      scala.util.Try(new String(out.toByteArray, "UTF-8").trim.toLong).toOption
+      new String(out.toByteArray, "UTF-8")
     } finally in.close()
   }
 
@@ -572,7 +576,7 @@ object GraphArMutations {
     * current value is already >= seq).
     */
   private def advanceMaxSeq(root: String, seq: Long,
-                            conf: org.apache.hadoop.conf.Configuration): Unit = {
+                            conf: Configuration): Unit = {
     if (maxSeqOf(root, conf).exists(_ >= seq)) return
     val p = new Path(s"$root/_MAX_SEQ")
     val tmp = new Path(s"$root/._MAX_SEQ.tmp")
@@ -594,24 +598,11 @@ object GraphArMutations {
     */
   private def writeBaseVersion(spark: SparkSession, base: String,
                                dir: String,
-                               conf: org.apache.hadoop.conf.Configuration): Unit = {
+                               conf: Configuration): Unit = {
     val v = GraphArSink.versions(spark, base).max
     val p = new Path(s"$dir/_BASE_VERSION")
     val out = p.getFileSystem(conf).create(p, true)
     try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def baseVersionOf(root: String, k: Long,
-                            conf: org.apache.hadoop.conf.Configuration): Option[Long] = {
-    val p = new Path(s"$root/d$k/_BASE_VERSION")
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return None  // pre-watermark log: treat as live
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
-      scala.util.Try(new String(out.toByteArray, "UTF-8").trim.toLong).toOption
-    } finally in.close()
   }
 
   /** The version whose directory holds this table's CURRENT data files
@@ -622,27 +613,58 @@ object GraphArMutations {
     "/v(\\d+)/(?:edge|vertex)/".r.findFirstMatchIn(resolvedDir)
       .map(_.group(1).toLong)
 
+  /** One committed delta dir: its sequence number and the entries it
+    * holds (`adds`, `removes`, `upserts`, `_BASE_VERSION`, ...).
+    */
+  private final case class StagedDelta(seq: Long, dir: Path, entries: Set[String]) {
+    def has(entry: String): Boolean = entries(entry)
+    def part(entry: String): String = new Path(dir, entry).toString
+  }
+
+  /** The committed deltas of the log at `root`, ascending — from one
+    * listing of the root and one of each `d<seq>` dir: a dir counts once
+    * its `_COMMITTED` marker is listed, and which parts it staged is
+    * read off the same listing (no per-part existence probes).
+    */
+  private def logOf(root: String, conf: Configuration): Seq[StagedDelta] = {
+    val p = new Path(root)
+    val fs = p.getFileSystem(conf)
+    // a missing root is an empty log; a dir a compaction removed
+    // between the two listings is gone
+    def list(dir: Path) =
+      try fs.listStatus(dir).toSeq catch { case _: java.io.FileNotFoundException => Nil }
+    list(p).filter(s => s.isDirectory && s.getPath.getName.matches("d\\d+"))
+      .flatMap { s =>
+        val entries = list(s.getPath).map(_.getPath.getName).toSet
+        s.getPath.getName.drop(1).toLongOption.filter(_ => entries("_COMMITTED"))
+          .map(StagedDelta(_, s.getPath, entries))
+      }.sortBy(_.seq)
+  }
+
   /** Committed deltas that are still LIVE: staged against (or after) the
     * type's last rewrite. Dead dirs — leftovers of a compaction that
     * crashed between commit and cleanup — are skipped by every reader
-    * and removed by the next compaction.
+    * and removed by the next compaction. A dir without `_BASE_VERSION`
+    * (a pre-watermark log) is live.
     */
-  private def liveDeltasIn(spark: SparkSession, root: String,
-                           rewriteVersion: Option[Long],
-                           conf: org.apache.hadoop.conf.Configuration): Seq[Long] =
-    stagedDeltasIn(spark, root).filter { k =>
-      (baseVersionOf(root, k, conf), rewriteVersion) match {
-        case (Some(bv), Some(rv)) => bv >= rv
-        case _ => true
-      }
-    }
+  private def liveOf(log: Seq[StagedDelta], rewriteVersion: Option[Long],
+                     conf: Configuration): Seq[StagedDelta] =
+    rewriteVersion.fold(log)(rv => log.filter { d =>
+      !d.has("_BASE_VERSION") || scala.util.Try(
+        readText(new Path(d.dir, "_BASE_VERSION"), conf).trim.toLong)
+        .toOption.forall(_ >= rv)
+    })
+
+  private def liveDeltasIn(root: String, rewriteVersion: Option[Long],
+                           conf: Configuration): Seq[StagedDelta] =
+    liveOf(logOf(root, conf), rewriteVersion, conf)
 
   /** The named edge type (or the single type when `edgeName` is None) of
     * the LATEST snapshot.
     */
   private def resolveEdge(spark: SparkSession, base: String,
                           edgeName: Option[String],
-                          conf: org.apache.hadoop.conf.Configuration): graft.meta.EdgeInfo = {
+                          conf: Configuration): graft.meta.EdgeInfo = {
     val curYaml = GraphArSink.latestYaml(spark, base)
     require(curYaml != null, s"no committed snapshot under $base — init first")
     val info = GraphArMeta.loadGraph(curYaml, conf)
@@ -666,23 +688,17 @@ object GraphArMutations {
                      edgeName: String): Seq[Long] =
     stagedDeltasIn(spark, deltaRoot(base, Some(edgeName)))
 
-  private def stagedDeltasIn(spark: SparkSession, root: String): Seq[Long] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return Seq.empty
-    fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("d") &&
-        fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_COMMITTED")))
-      .flatMap(s => scala.util.Try(s.getPath.getName.drop(1).toLong).toOption)
-      .sorted
-  }
+  private def stagedDeltasIn(spark: SparkSession, root: String): Seq[Long] =
+    logOf(root, spark.sessionState.newHadoopConf()).map(_.seq)
 
   /** The edge table as of LATEST snapshot + every staged delta, folded
     * in sequence (an add staged before a remove of the same key IS
     * removed, and vice versa). Standard (src, dst, props...) names.
-    * Scan cost: one snapshot scan + one union/anti-join per staged
-    * delta — compact before the log grows past a handful.
+    * One plan whatever the log length: one snapshot scan, one parquet
+    * scan of every live delta's adds and, when the log holds removes,
+    * one scan of them feeding a single anti-join. Building it lists the
+    * log once and launches no Spark job (the delta files are read with
+    * the snapshot's schema, so no schema inference runs).
     */
   def currentEdges(spark: SparkSession, base: String): DataFrame =
     currentEdgesIn(spark, base, None)
@@ -697,24 +713,70 @@ object GraphArMutations {
     val conf = spark.sessionState.newHadoopConf()
     val e = resolveEdge(spark, base, edgeName, conf)
     val snap = readEdgeTable(spark, GraphArSink.latestYaml(spark, base), e)
-    val root = deltaRoot(base, edgeName)
-    val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(conf)
-    liveDeltasIn(spark, root, rewriteVersionOf(e.dir), conf).foldLeft(snap) { (cur, k) =>
-      val dir = s"$root/d$k"
-      val withAdds =
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/adds")))
-          cur.unionByName(spark.read.parquet(s"$dir/adds"))
-        else cur
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/removes")))
-        withAdds.join(spark.read.parquet(s"$dir/removes"),
-          Seq("src", "dst"), "left_anti")
-      else withAdds
+    val live = liveDeltasIn(deltaRoot(base, edgeName), rewriteVersionOf(e.dir), conf)
+    def read(part: String, schema: StructType): Option[DataFrame] =
+      Some(live.filter(_.has(part)).map(_.part(part))).filter(_.nonEmpty)
+        .map(dirs => spark.read.schema(schema).parquet(dirs: _*))
+    val adds = read("adds", edgeSchema(e))
+    read("removes", KeySchema) match {
+      case None => adds.fold(snap)(snap.unionByName(_))
+      case Some(removes) =>
+        // the sequential fold's multiset in one anti-join: a row added
+        // by delta j (snapshot rows: -1) survives iff no delta k >= j
+        // removes its key — so an add and a remove in one delta cancel
+        val rows = snap.withColumn(SeqCol, lit(-1L))
+        val tagged = adds.fold(rows)(a => rows.unionByName(a.withColumn(SeqCol, seqOf("adds"))))
+        val lastRemove = removes.withColumn(SeqCol, seqOf("removes"))
+          .groupBy(col("src").as("_rsrc"), col("dst").as("_rdst"))
+          .agg(max(col(SeqCol)).as("_rseq"))
+        tagged.join(lastRemove, col("src") === col("_rsrc") &&
+          col("dst") === col("_rdst") && col(SeqCol) <= col("_rseq"), "left_anti")
+          .drop(SeqCol)
     }
+  }
+
+  private val SeqCol = "_graftDeltaSeq"
+
+  /** The sequence number of the delta a row of `part` was read from. */
+  private def seqOf(part: String): Column =
+    regexp_extract(col("_metadata.file_path"), s".*/d(\\d+)/$part/[^/]*$$", 1)
+      .cast(LongType)
+
+  private val KeySchema = StructType(Seq(
+    StructField("src", LongType, nullable = false),
+    StructField("dst", LongType, nullable = false)))
+
+  /** The snapshot edge table's schema: (src, dst, properties...). */
+  private def edgeSchema(e: graft.meta.EdgeInfo): StructType =
+    StructType(KeySchema.fields ++ propertyFields(e.propertyGroups))
+
+  private def propertyFields(groups: Seq[graft.meta.GarPropertyGroup]): Seq[StructField] =
+    groups.flatMap(_.properties).map(p =>
+      StructField(p.name, GraphArMeta.sparkType(p.dataType), p.isNullable))
+
+  /** `df` with exactly `want`'s columns, in its order and types. A
+    * column whose type Spark can widen to the snapshot's (int -> long,
+    * float -> double, ...) is cast; any other mismatch is refused here,
+    * at stage time, so no delta in the log can fail a later fold.
+    */
+  private def conformTo(df: DataFrame, want: StructType, what: String,
+                        schemaName: String): DataFrame = {
+    val got = df.schema
+    require(got.fieldNames.toSet == want.fieldNames.toSet,
+      s"$what columns ${got.fieldNames.mkString("(", ", ", ")")} don't match " +
+        s"the $schemaName ${want.fieldNames.mkString("(", ", ", ")")}")
+    val narrowed = want.fields.toSeq.collect {
+      case f if !Cast.canUpCast(got(f.name).dataType, f.dataType) =>
+        s"${f.name}: ${got(f.name).dataType.simpleString} -> ${f.dataType.simpleString}"
+    }
+    require(narrowed.isEmpty,
+      s"$what column types don't widen to the snapshot's: ${narrowed.mkString(", ")}")
+    df.select(want.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
   }
 
   /** SQL exposure of the delta-folded table: registers
     * `currentEdges(base)` as temp view `name`. A view (not a DSv2
-    * option) on purpose — the fold is a plan of unions/anti-joins above
+    * option) on purpose — the fold is a union and an anti-join above
     * the snapshot scan, which is exactly what a Spark view IS; pushing
     * it inside the connector would hide joins from Catalyst.
     *
@@ -762,18 +824,17 @@ object GraphArMutations {
                               newVertexCount: Option[Long]): Long = synchronized {
     val conf = spark.sessionState.newHadoopConf()
     val root = deltaRoot(base, edgeName)
-    val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(conf)
+    val fs = new Path(base).getFileSystem(conf)
     val e = resolveEdge(spark, base, edgeName, conf)
-    val all = stagedDeltasIn(spark, root)
-    val live = liveDeltasIn(spark, root, rewriteVersionOf(e.dir), conf)
+    val all = logOf(root, conf)
+    val live = liveOf(all, rewriteVersionOf(e.dir), conf)
     // never delete a staged dir before the watermark covers its seq —
     // the dir is the only OTHER replay record (repairs a stage that
     // crashed between its _COMMITTED marker and its watermark write)
-    all.sorted.lastOption.foreach(advanceMaxSeq(root, _, conf))
+    all.lastOption.foreach(d => advanceMaxSeq(root, d.seq, conf))
     // dead dirs = a prior compaction crashed between commit and cleanup;
     // readers already ignore them, finish the cleanup here
-    all.diff(live).foreach(k => fs.delete(
-      new org.apache.hadoop.fs.Path(s"$root/d$k"), true))
+    all.diff(live).foreach(d => fs.delete(d.dir, true))
     if (live.isEmpty) return -1L
     val folded = currentEdgesIn(spark, base, edgeName)
     // materialize before the snapshot swap: the folded plan reads the
@@ -787,17 +848,16 @@ object GraphArMutations {
         case Some(n) => commitEdgesOf(spark, base, n, _ => folded, newVertexCount)
       }
       finally compacting.set(false)
-    live.foreach(k => fs.delete(
-      new org.apache.hadoop.fs.Path(s"$root/d$k"), true))
+    live.foreach(d => fs.delete(d.dir, true))
     v
   }
 
-  /** Live (non-superseded) deltas of one log — see [[liveDeltasIn]]. */
+  /** Live (non-superseded) deltas of one log — see [[liveOf]]. */
   private def liveDeltas(spark: SparkSession, base: String,
-                         edgeName: Option[String]): Seq[Long] = {
+                         edgeName: Option[String]): Seq[StagedDelta] = {
     val conf = spark.sessionState.newHadoopConf()
     val e = resolveEdge(spark, base, edgeName, conf)
-    liveDeltasIn(spark, deltaRoot(base, edgeName), rewriteVersionOf(e.dir), conf)
+    liveDeltasIn(deltaRoot(base, edgeName), rewriteVersionOf(e.dir), conf)
   }
 
   // ---------------------------------------------------- change data feed
@@ -1072,7 +1132,7 @@ object GraphArMutations {
   /** The named vertex type (or the single type when None) of LATEST. */
   private def resolveVertexIn(spark: SparkSession, base: String,
                               vertexType: Option[String],
-                              conf: org.apache.hadoop.conf.Configuration): graft.meta.VertexInfo =
+                              conf: Configuration): graft.meta.VertexInfo =
     vertexType match {
       case None => resolveVertex(spark, base, conf)
       case Some(n) =>
@@ -1115,32 +1175,34 @@ object GraphArMutations {
     require(upserts.nonEmpty || removeKeys.nonEmpty, "empty delta")
     val conf = spark.sessionState.newHadoopConf()
     val v = resolveVertexIn(spark, base, vertexType, conf)
-    val props = v.propertyGroups.flatMap(_.properties.map(_.name)).toSet
-    require(props.contains(orderCol),
+    val schema = vertexSchema(v)
+    require(schema.fieldNames.contains(orderCol),
       s"orderCol '$orderCol' is not a property of ${v.vertexType} " +
-        s"(${props.mkString(", ")})")
-    upserts.foreach { df =>
-      val got = df.columns.toSet
-      require(got == props,
-        s"upsert columns ${got.mkString("(", ", ", ")")} don't match the " +
-          s"vertex property schema ${props.mkString("(", ", ", ")")}")
+        s"(${schema.fieldNames.mkString(", ")})")
+    val upsertRows = upserts.map { df =>
+      val rows = conformTo(df, schema, "upsert", "vertex property schema")
       // one row per key, or the fold's replace semantics are undefined —
       // an O(delta) check, and deltas are small by design
-      val Array(n, uniq) = df.agg(count(lit(1)), countDistinct(col(orderCol)))
+      val Array(n, uniq) = rows.agg(count(lit(1)), countDistinct(col(orderCol)))
         .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
       require(n == uniq,
         s"upsert frame has ${n - uniq} duplicate '$orderCol' keys — " +
           "pre-reduce the delta to one row per key (last-write-wins is " +
           "the caller's ordering decision)")
+      rows
     }
-    removeKeys.foreach(df => require(df.columns.contains(orderCol),
-      s"removeKeys must carry the '$orderCol' key column"))
+    val removeRows = removeKeys.map { df =>
+      require(df.columns.contains(orderCol),
+        s"removeKeys must carry the '$orderCol' key column")
+      conformTo(df.select(col(orderCol)), StructType(Seq(schema(orderCol))),
+        "vertex removeKeys", "vertex key")
+    }
     val root = vdeltaRoot(base, vertexType)
     val staged = stagedDeltasIn(spark, root)
     // consistency vs the LIVE log only — a dead leftover from a crashed
     // compaction must not veto a fresh log under a different key
-    liveVertexDeltasIn(spark, base, vertexType).headOption.foreach { k =>
-      val prior = readOrderCol(root, k, conf)
+    liveVertexDeltasIn(spark, base, vertexType).headOption.foreach { d =>
+      val prior = readOrderCol(d, conf)
       require(prior == orderCol,
         s"log already staged under orderCol '$prior'; got '$orderCol'")
     }
@@ -1157,15 +1219,14 @@ object GraphArMutations {
     val dir = s"$root/d$next"
     // clear any crashed (uncommitted) leftover under the same seq
     if (fs.exists(new Path(dir))) fs.delete(new Path(dir), true)
-    upserts.foreach(_.write.mode("overwrite").parquet(s"$dir/upserts"))
-    removeKeys.foreach(_.select(col(orderCol)).distinct()
-      .write.mode("overwrite").parquet(s"$dir/removes"))
+    upsertRows.foreach(_.write.mode("overwrite").parquet(s"$dir/upserts"))
+    removeRows.foreach(_.distinct().write.mode("overwrite").parquet(s"$dir/removes"))
     val out = fs.create(new Path(s"$dir/_ORDER_COL"), true)
     try out.write(orderCol.getBytes("UTF-8")) finally out.close()
     writeBaseVersion(spark, base, dir, conf)
     fs.create(new Path(s"$dir/_COMMITTED"), true).close()
     advanceMaxSeq(root, next, conf)
-    // same read-degradation bound as the edge log
+    // same log-size bound as the edge log
     val cap = spark.conf.getOption("spark.graft.maxStagedDeltas")
       .map(_.toInt).getOrElse(32)
     if (cap > 0 && liveVertexDeltasIn(spark, base, vertexType).size >= cap)
@@ -1173,17 +1234,20 @@ object GraphArMutations {
     next
   }
 
-  /** Live (non-superseded) vertex deltas — see [[liveDeltasIn]]. */
-  private def liveVertexDeltas(spark: SparkSession, base: String): Seq[Long] =
+  /** Live (non-superseded) vertex deltas — see [[liveOf]]. */
+  private def liveVertexDeltas(spark: SparkSession, base: String): Seq[StagedDelta] =
     liveVertexDeltasIn(spark, base, None)
 
   private def liveVertexDeltasIn(spark: SparkSession, base: String,
-                                 vertexType: Option[String]): Seq[Long] = {
+                                 vertexType: Option[String]): Seq[StagedDelta] = {
     val conf = spark.sessionState.newHadoopConf()
     val v = resolveVertexIn(spark, base, vertexType, conf)
-    liveDeltasIn(spark, vdeltaRoot(base, vertexType),
-      rewriteVersionOf(v.dir), conf)
+    liveDeltasIn(vdeltaRoot(base, vertexType), rewriteVersionOf(v.dir), conf)
   }
+
+  /** A vertex table's property columns (no synthetic index). */
+  private def vertexSchema(v: graft.meta.VertexInfo): StructType =
+    StructType(propertyFields(v.propertyGroups))
 
   /** Committed vertex-delta sequence numbers, ascending. */
   def stagedVertexDeltas(spark: SparkSession, base: String): Seq[Long] =
@@ -1216,21 +1280,20 @@ object GraphArMutations {
       .option("path", GraphArSink.latestYaml(spark, base))
       .option("type", v.vertexType).load()
       .drop(GraphArMeta.VertexIndexCol)
-    val root = vdeltaRoot(base, vertexType)
-    val staged = liveDeltasIn(spark, root, rewriteVersionOf(v.dir), conf)
-    val orderCol = staged.headOption.map(k => readOrderCol(root, k, conf))
-    val fs = new Path(base).getFileSystem(conf)
-    staged.foldLeft(snap) { (cur, k) =>
-      val dir = s"$root/d$k"
-      val key = orderCol.get
+    val staged = liveDeltasIn(vdeltaRoot(base, vertexType), rewriteVersionOf(v.dir), conf)
+    val schema = vertexSchema(v)
+    val key = staged.headOption.map(readOrderCol(_, conf)).orNull
+    // read with the snapshot's schema: no per-delta inference job
+    staged.foldLeft(snap) { (cur, d) =>
       val withUps =
-        if (fs.exists(new Path(s"$dir/upserts"))) {
-          val up = spark.read.parquet(s"$dir/upserts")
+        if (d.has("upserts")) {
+          val up = spark.read.schema(schema).parquet(d.part("upserts"))
           cur.join(up.select(col(key)), Seq(key), "left_anti")
             .unionByName(up.select(cur.columns.map(col).toSeq: _*))
         } else cur
-      if (fs.exists(new Path(s"$dir/removes")))
-        withUps.join(spark.read.parquet(s"$dir/removes"), Seq(key), "left_anti")
+      if (d.has("removes"))
+        withUps.join(spark.read.schema(StructType(Seq(schema(key))))
+          .parquet(d.part("removes")), Seq(key), "left_anti")
       else withUps
     }
   }
@@ -1255,42 +1318,34 @@ object GraphArMutations {
     val conf = spark.sessionState.newHadoopConf()
     val root = vdeltaRoot(base, vertexType)
     val fs = new Path(base).getFileSystem(conf)
-    val all = stagedDeltasIn(spark, root)
-    val live = liveVertexDeltasIn(spark, base, vertexType)
+    val v = resolveVertexIn(spark, base, vertexType, conf)
+    val all = logOf(root, conf)
+    val live = liveOf(all, rewriteVersionOf(v.dir), conf)
     // watermark must cover every dir this compaction may delete (see
     // compactDeltasIn)
-    all.sorted.lastOption.foreach(advanceMaxSeq(root, _, conf))
+    all.lastOption.foreach(d => advanceMaxSeq(root, d.seq, conf))
     // leftovers of a compaction that crashed between commit and cleanup
-    all.diff(live).foreach(k => fs.delete(new Path(s"$root/d$k"), true))
+    all.diff(live).foreach(d => fs.delete(d.dir, true))
     if (live.isEmpty) return -1L
-    val orderCol = readOrderCol(root, live.head, conf)
+    val orderCol = readOrderCol(live.head, conf)
     val folded = currentVerticesIn(spark, base, vertexType)
     compacting.set(true)
-    val v =
+    val version =
       try vertexType match {
         case None => commitVertices(spark, base, _ => folded, orderCol)
         case Some(n) => commitVerticesOf(spark, base, n, _ => folded, orderCol)
       }
       finally compacting.set(false)
-    live.foreach(k => fs.delete(new Path(s"$root/d$k"), true))
-    v
+    live.foreach(d => fs.delete(d.dir, true))
+    version
   }
 
-  private def readOrderCol(root: String, k: Long,
-                           conf: org.apache.hadoop.conf.Configuration): String = {
-    val p = new Path(s"$root/d$k/_ORDER_COL")
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
-      new String(out.toByteArray, "UTF-8")
-    } finally in.close()
-  }
+  private def readOrderCol(d: StagedDelta, conf: Configuration): String =
+    readText(new Path(d.dir, "_ORDER_COL"), conf)
 
   /** The single vertex type of the LATEST snapshot. */
   private def resolveVertex(spark: SparkSession, base: String,
-                            conf: org.apache.hadoop.conf.Configuration): graft.meta.VertexInfo = {
+                            conf: Configuration): graft.meta.VertexInfo = {
     val curYaml = GraphArSink.latestYaml(spark, base)
     require(curYaml != null, s"no committed snapshot under $base — initVertices first")
     val info = GraphArMeta.loadGraph(curYaml, conf)

@@ -4,6 +4,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.Partitioner
 import org.apache.spark.TaskContext
+import org.apache.spark.rdd.ShuffledRDD
+import org.apache.spark.serializer.KryoSerializer
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
@@ -16,8 +18,9 @@ import graft.meta.GraphArMeta
   * SURVEY.md §2.1 anticipates, and it also generates our test fixtures.
   *
   * Scale design: vertices are indexed with one zipWithIndex pass and
-  * written chunk-per-task; edges are `repartitionAndSortWithinPartitions`
-  * by (src, dst) with one partition per aligned-vertex chunk ("part"), so
+  * written chunk-per-task; edges are shuffled and sorted by (src, dst)
+  * (Kryo-serialized, property values already in their file encoding)
+  * with one partition per aligned-vertex chunk ("part"), so
   * each task streams its part once, rolling adjacency/property chunk files
   * every `chunk_size` rows and accumulating the CSR offset table
   * (cumulative per-vertex boundaries + trailing end — the layout the
@@ -343,6 +346,8 @@ object GraphArWriter {
             "integral, string and date columns are bloom-indexable")
       }
     }
+    // refuse a type GraphAr cannot declare before any layout is written
+    propFields.foreach(f => GraphArMeta.garType(f.dataType))
     val dir = s"$baseDir/edge/${spec.name}/"
     var total = 0L
     spec.layouts.foreach { alignedBy =>
@@ -365,13 +370,17 @@ object GraphArWriter {
                           serConf: org.apache.spark.util.SerializableConfiguration): Long = {
     val srcIdx = schema.fieldIndex("src")
     val dstIdx = schema.fieldIndex("dst")
-    // (group name, schema of its columns, their indexes in the input
-    // row, bloom positions inside the group row)
+    // every group's property values, concatenated in group order, ride
+    // the shuffle as one array; a group owns the slice [from, until)
+    val propIdx = groups.flatMap(_._2).map(schema.fieldIndex).toArray
+    val bounds = groups.map(_._2.size).scanLeft(0)(_ + _)
+    // (group name, schema of its columns, its slice of the shuffled
+    // values, bloom positions inside the group row)
     val bloomSet = spec.bloomCols.toSet
-    val groupSpecs: Seq[(String, StructType, Array[Int], Seq[(Int, String)])] =
-      groups.map { case (gName, cols) =>
+    val groupSpecs: Seq[(String, StructType, (Int, Int), Seq[(Int, String)])] =
+      groups.zipWithIndex.map { case ((gName, cols), g) =>
         (gName, StructType(cols.map(c => schema(schema.fieldIndex(c)))),
-          cols.map(schema.fieldIndex).toArray,
+          (bounds(g), bounds(g + 1)),
           cols.zipWithIndex.collect { case (c, gi) if bloomSet(c) => (gi, c) })
       }
     val cs = spec.chunkSize
@@ -381,14 +390,18 @@ object GraphArWriter {
       StructField(GraphArMeta.SrcIndexCol, LongType, nullable = false),
       StructField(GraphArMeta.DstIndexCol, LongType, nullable = false)))
 
+    // key (aligned, other), value the property values in file encoding:
+    // a Kryo shuffle of longs and plain values, not Java-serialized Rows
     val keyed = df.rdd.map { r =>
       val s = r.getLong(srcIdx); val d = r.getLong(dstIdx)
       val key = if (alignedBy == "src") (s, d) else (d, s)
-      (key, r)
+      (key, propIdx.map(i => toIo(r, i, schema)))
     }
     val factor = packFactor(nParts, spec.maxTasks)
-    val counts = keyed
-      .repartitionAndSortWithinPartitions(new PackedIdPartitioner(nParts, vcs, factor))
+    val counts = new ShuffledRDD[(Long, Long), Array[Any], Array[Any]](keyed,
+      new PackedIdPartitioner(nParts, vcs, factor))
+      .setKeyOrdering(Ordering[(Long, Long)])
+      .setSerializer(new KryoSerializer(df.sparkSession.sparkContext.getConf))
       .mapPartitions { it =>
         val conf = serConf.value
         val files = new TaskFiles(conf)
@@ -409,7 +422,7 @@ object GraphArWriter {
         var chunkIdx = -1L
         var lastAligned = -1L
         var adjSink: ChunkIO.RowSink = null
-        var propSinks: Seq[(ChunkIO.RowSink, Array[Int],
+        var propSinks: Seq[(ChunkIO.RowSink, (Int, Int),
           Seq[(Int, String, org.apache.spark.util.sketch.BloomFilter)], Path)] = null
         def flushBlooms(): Unit = if (propSinks != null)
           propSinks.foreach { case (_, _, blooms, bloomPath) =>
@@ -424,7 +437,7 @@ object GraphArWriter {
           chunkIdx += 1
           adjSink = ChunkIO.openSink(files.stage(
             new Path(s"${layoutDir}adj_list/part$part/chunk$chunkIdx")), ft, adjSchema, conf)
-          propSinks = groupSpecs.map { case (gName, gSchema, idxs, bloomPos) =>
+          propSinks = groupSpecs.map { case (gName, gSchema, slice, bloomPos) =>
             val blooms = bloomPos.map { case (gi, name) =>
               (gi, name, org.apache.spark.util.sketch.BloomFilter.create(
                 math.min(cs, Int.MaxValue.toLong), spec.bloomFpp))
@@ -433,7 +446,7 @@ object GraphArWriter {
               new Path(s"$layoutDir$gName/part$part/chunk$chunkIdx.bloom")) else null
             (ChunkIO.openSink(files.stage(
               new Path(s"$layoutDir$gName/part$part/chunk$chunkIdx")), ft, gSchema, conf),
-              idxs, blooms, bloomPath)
+              slice, blooms, bloomPath)
           }
         }
         def closeSinks(): Unit = {
@@ -469,7 +482,7 @@ object GraphArWriter {
         try {
           var nextPart = partLo
           try {
-            it.foreach { case ((aligned, _), row) =>
+            it.foreach { case ((aligned, other), props) =>
               if (aligned < partLo.toLong * vcs || aligned >= alignedCount)
                 throw new IllegalArgumentException(
                   s"edge ${if (alignedBy == "src") "src" else "dst"} id $aligned " +
@@ -477,10 +490,10 @@ object GraphArWriter {
               val p = (aligned / vcs).toInt
               while (nextPart <= p) { finishPart(); startPart(nextPart); nextPart += 1 }
               if (edgeCount % cs == 0) roll()
-              val s = row.getLong(srcIdx); val d = row.getLong(dstIdx)
-              adjSink.write(Array[Any](s, d))
-              propSinks.foreach { case (sink, idxs, blooms, _) =>
-                val vals = idxs.map(i => toIo(row, i, schema))
+              adjSink.write(
+                if (alignedBy == "src") Array[Any](aligned, other) else Array[Any](other, aligned))
+              propSinks.foreach { case (sink, (from, until), blooms, _) =>
+                val vals = props.slice(from, until)
                 sink.write(vals)
                 blooms.foreach { case (gi, _, bf) =>
                   vals(gi) match {

@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The entry points without Spark: each main parses its arguments with
   * a pure function before it builds a session, so a bad command fails
-  * here first; and the scale timing loop's `only=` filter never
-  * evaluates a skipped body.
+  * here first; the scale timing loop's `only=` filter never
+  * evaluates a skipped body; and a rung under `only=` builds only what
+  * the selected label reads.
   */
 class HarnessSpec extends AnyFunSuite {
 
@@ -29,6 +30,21 @@ class HarnessSpec extends AnyFunSuite {
     assert(Plans.parse(Seq("dump", "/sf", "/out", "r", "g_pagerank")) ===
       Plans.Dump("/sf", "/out", "r", Seq("g_pagerank")))
     assert(Plans.parse(Nil).asInstanceOf[Plans.Regenerate].out === "docs/PLANS.md")
+  }
+
+  test("a scale rung under only= builds just what the selected label reads") {
+    assert(ScaleBench.needsMergeTable(None))
+    assert(ScaleBench.needsMergeTable(Some("bpe_encode_512")))
+    assert(!ScaleBench.needsMergeTable(Some("bm25_top20")))
+    assert(ScaleBench.vectorSteps(None) ===
+      Set("ivf_build", "ivfpq_build", "ivfpq_append_1pct", "ivfpq_compact"))
+    assert(ScaleBench.vectorSteps(Some("ivf_stored_probe")) === Set("ivf_build"))
+    assert(ScaleBench.vectorSteps(Some("ivfpq_stored_probe")) === Set("ivfpq_build"))
+    assert(ScaleBench.vectorSteps(Some("ivfpq_probe_with_delta")) ===
+      Set("ivfpq_build", "ivfpq_append_1pct"))
+    assert(ScaleBench.vectorSteps(Some("ivfpq_probe_compacted")) ===
+      Set("ivfpq_build", "ivfpq_append_1pct", "ivfpq_compact"))
+    assert(ScaleBench.vectorSteps(Some("brute_topk")).isEmpty)
   }
 
   test("Bench with no arguments selects the headline mode; sweep all expands") {

@@ -236,6 +236,72 @@ class RoundTripSpec extends AnyFunSuite {
     }.getMessage.contains("not assigned"))
   }
 
+  test("edge write: string, date, double and null properties round-trip on both layouts; decimal refused") {
+    import spark.implicits._
+    val n = 60
+    val rows = (0 until n).map { i =>
+      (((i * 7) % 13).toLong, ((i * 5) % 11).toLong,
+        if (i % 9 == 0) null else s"s$i",
+        if (i % 8 == 0) null else java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(19000L + i)),
+        if (i % 7 == 0) None else Some(i / 4.0))
+    }
+    def asTuples(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => (r.getLong(0),
+      r.getLong(1), Option(r.getString(2)),
+      Option(r.get(3)).map {
+        case d: java.sql.Date => d.toLocalDate.toEpochDay
+        case d: java.time.LocalDate => d.toEpochDay
+      },
+      if (r.isNullAt(4)) None else Some(r.getDouble(4)))).toSeq.sortBy(_.toString)
+    // the writer sees java.sql.Date rows, then java.time.LocalDate rows
+    for ((java8, dateClass) <- Seq("false" -> classOf[java.sql.Date],
+                                   "true" -> classOf[java.time.LocalDate])) {
+      spark.conf.set("spark.sql.datetime.java8API.enabled", java8)
+      try {
+        val edges = rows.toDF("src", "dst", "s", "dt", "d")
+        assert(edges.rdd.filter(!_.isNullAt(3)).first().get(3).getClass === dateClass)
+        val input = asTuples(edges)
+        // the first listed layout serves a full scan: write it both ways
+        for (layouts <- Seq(Seq("src", "dst"), Seq("dst", "src"))) {
+          val dir = Files.createTempDirectory(s"gar_kryo_${layouts.head}").toString
+          val spec = GraphArWriter.EdgeSpec("T", "e", "T", srcVertexCount = 13,
+            dstVertexCount = 13, chunkSize = 4, srcChunkSize = 4, dstChunkSize = 4,
+            layouts = layouts, bloomCols = Seq("s", "dt"))
+          assert(GraphArWriter.writeEdges(edges, dir, spec,
+            groups = Seq("g1" -> Seq("s", "dt"), "g2" -> Seq("d"))) === n.toLong)
+          GraphArWriter.writeVertices((0 until 13).map(Tuple1(_)).toDF("x"), dir,
+            GraphArWriter.VertexSpec("T", 4))
+          GraphArWriter.writeGraphYaml(dir, "G", Seq("T"), Seq("T_e_T"))
+          val back = spark.read.format("graphar").option("path", s"$dir/G.yaml")
+            .option("src", "T").option("type", "e").option("dst", "T").load()
+            .select("_graphArSrcIndex", "_graphArDstIndex", "s", "dt", "d")
+          assert(asTuples(back) === input, s"java8API=$java8 layouts=$layouts")
+          // each layout's offsets: monotone, and their steps are the
+          // aligned vertices' degrees
+          for ((layout, aligned) <- Seq("ordered_by_source" -> 0, "ordered_by_dest" -> 1)) {
+            val degrees = input.groupBy(t => if (aligned == 0) t._1 else t._2)
+              .map { case (v, es) => v -> es.size.toLong }
+            val offsets = (0 until 4).flatMap { p =>
+              val o = spark.read.parquet(s"$dir/edge/T_e_T/$layout/offset/chunk$p")
+                .collect().map(_.getLong(0)).toSeq
+              assert(o.head === 0L && o.sliding(2).forall(w => w(0) <= w(1)),
+                s"$layout part $p offsets $o")
+              o.sliding(2).map(w => w(1) - w(0)).toSeq
+            }
+            assert(offsets === (0L until 13L).map(degrees.getOrElse(_, 0L)), layout)
+          }
+        }
+      } finally spark.conf.unset("spark.sql.datetime.java8API.enabled")
+    }
+    // GraphAr has no decimal type: refused before any layout is written
+    val dir = Files.createTempDirectory("gar_kryo_dec").toString
+    val dec = Seq((0L, 1L, BigDecimal("1.25"))).toDF("src", "dst", "amount")
+    intercept[IllegalArgumentException] {
+      GraphArWriter.writeEdges(dec, dir,
+        GraphArWriter.EdgeSpec("T", "e", "T", srcVertexCount = 2, dstVertexCount = 2))
+    }
+    assert(!new java.io.File(s"$dir/edge").exists)
+  }
+
   test("packed write tasks (maxTasks) produce byte-identical layout to one-chunk-per-task") {
     import spark.implicits._
     def degreeMap(yaml: String): Map[Long, Long] =
