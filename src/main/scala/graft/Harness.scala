@@ -8,8 +8,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Session: `local[n]` with `n` from `SPARK_GRAFT_CPUS`, else the JVM's
   * available processors; `n` shuffle partitions, AQE on, UTC session
-  * time zone, UI off, and a recursive-CTE row limit of 10⁸ (the 10⁶
-  * default trips `q30_recursive` at sf0.1).
+  * time zone, UI off, a recursive-CTE row limit of 10⁸ (the 10⁶
+  * default trips `q30_recursive` at sf0.1), and
+  * `graft.graph.GraftSparkSessionExtension` installed, as in perfbench.
   */
 object Harness {
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
@@ -31,6 +32,7 @@ object Harness {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.cteRecursionRowLimit", "100000000")
+      .config("spark.sql.extensions", "graft.graph.GraftSparkSessionExtension")
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
     conf.foreach { case (k, v) => spark.conf.set(k, v) }

@@ -45,8 +45,11 @@ object Plans {
     val g = graph.GraphArGraph(spark, yaml)
 
     val sections: Seq[(String, DataFrame)] = Seq(
-      "vertex_count (metadata aggregate pushdown)" ->
+      "vertex_count (metadata aggregate pushdown, answered with no job)" ->
         g.vertices("Part").agg(count(lit(1)).as("n")),
+      "one_hop_count (seek count from two offset entries, answered with no job)" ->
+        g.edges("Part", "link", "Part").filter(col("_graphArSrcIndex") === 42L)
+          .agg(count(lit(1)).as("n")),
       "vertex_full_scan (columnar boundary: batches cross the DSv2 scan)" ->
         g.vertices("Part").select(col("_graphArVertexIndex"), col("p_partkey"),
           col("p_name")),

@@ -321,11 +321,13 @@ object GraphTableFunctions {
 }
 
 /** `spark.sql.extensions` entry point injecting the graph TVFs, the
-  * text/dedup TVFs, and the compiled scalar kernels
-  * (minhash/dot/cosine).
+  * text/dedup TVFs, the compiled scalar kernels
+  * (minhash/dot/cosine), and the job-free answer to a fully pushed
+  * GraphAr `count(*)` ([[graft.sources.graphar.MetadataCount]]).
   */
 class GraftSparkSessionExtension extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPlannerStrategy(_ => graft.sources.graphar.MetadataCount)
     GraphTableFunctions.descriptions.foreach(ext.injectTableFunction)
     graft.operators.TextTableFunctions.descriptions.foreach(ext.injectTableFunction)
     graft.functions.ScalarSqlFunctions.descriptions.foreach(ext.injectFunction)

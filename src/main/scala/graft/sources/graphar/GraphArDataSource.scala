@@ -43,9 +43,11 @@ import org.apache.spark.util.SerializableConfiguration
   *    (resp. _dest) CSR layout, reads the offset table driver-side and
   *    plans only the adjacency chunks covering [offset[v], offset[v+1])
   *    — O(degree) I/O, like read_edges.cpp:114-153;
-  *  - COUNT(*) with no filters is answered from vertex_count/edge_count
-  *    metadata files via aggregate pushdown (the reference scans instead —
-  *    5.9s/71s at LDBC-30, BASELINE.md — this is our designed win);
+  *  - COUNT(*) with no filters, or under a single-id seek, is answered
+  *    from vertex_count/edge_count metadata files or two offset entries
+  *    via aggregate pushdown, with no Spark job under [[MetadataCount]]
+  *    (the reference scans instead — 5.9s/71s at LDBC-30, BASELINE.md —
+  *    this is our designed win);
   *  - row counts reported to Catalyst via SupportsReportStatistics.
   */
 class GraphArDataSource extends TableProvider with DataSourceRegister {
@@ -306,8 +308,9 @@ class GraphArScanBuilder(info: Either[VertexInfo, EdgeInfo])
   }
   override def isPartiallyPushed: Boolean = false
 
+  // a single-id seek is exact too: its count is the offset-pair length
   override def supportCompletePushDown(aggregation: Aggregation): Boolean =
-    isBareCountStar(aggregation) && idFilter.isEmpty && !hasResidual && limit.isEmpty
+    isBareCountStar(aggregation) && !hasResidual && limit.isEmpty
 
   override def pushAggregation(aggregation: Aggregation): Boolean = {
     if (!supportCompletePushDown(aggregation)) return false
@@ -331,7 +334,7 @@ class GraphArScan(info: Either[VertexInfo, EdgeInfo], required: StructType,
                   limit: Option[Int], countStar: Boolean,
                   serConf: SerializableConfiguration,
                   idInFilter: Option[(String, Array[Long])] = None)
-  extends Scan with Batch with SupportsReportStatistics {
+  extends Scan with Batch with SupportsReportStatistics with PushedCount {
 
   private def conf = serConf.value
 
@@ -356,12 +359,10 @@ class GraphArScan(info: Either[VertexInfo, EdgeInfo], required: StructType,
   // and the count branch of planInputPartitions reuses it (metadata reads
   // are driver-side FS round-trips, expensive on object stores).
   private lazy val metaRowCount: Long = (info, idFilter) match {
-      case (Left(v), Some(_)) => 1L
-      case (Left(v), None) => idInFilter match {
-        case Some((_, vids)) =>
-          val n = v.vertexCount(conf)
-          vids.count(vid => vid >= 0 && vid < n).toLong
-        case None => v.vertexCount(conf)
+      case (Left(_), Some((_, vid))) => if (0 <= vid && vid < vertexCount) 1L else 0L
+      case (Left(_), None) => idInFilter match {
+        case Some((_, vids)) => vids.count(vid => vid >= 0 && vid < vertexCount).toLong
+        case None => vertexCount
       }
       case (Right(e), Some((c, vid))) =>
         val al = if (c == GraphArMeta.DstIndexCol) e.adjList("dst").get
@@ -375,6 +376,9 @@ class GraphArScan(info: Either[VertexInfo, EdgeInfo], required: StructType,
           e.adjLists.headOption.map(e.edgeCount(_, conf)).getOrElse(0L)
       }
     }
+
+  /** The vertex table's `vertex_count`, read once per Scan. */
+  private lazy val vertexCount: Long = info.fold(_.vertexCount(conf), _ => 0L)
 
   /** Layout for the IN-seek: same filter-column-driven choice as the
     * single-id seek (read_edges.cpp:81-110). */
@@ -409,7 +413,11 @@ class GraphArScan(info: Either[VertexInfo, EdgeInfo], required: StructType,
       planInputPartitionsImpl()
     }
 
+  override def pushedCount: Option[Long] = if (countStar) Some(metaRowCount) else None
+
   private def planInputPartitionsImpl(): Array[InputPartition] = {
+    // reached for a pushed count only in a session without
+    // GraftSparkSessionExtension (MetadataCount answers it otherwise)
     if (countStar) return Array(CountPartition(metaRowCount))
     pack(info match {
       case Left(v) => planVertex(v)
@@ -460,7 +468,7 @@ class GraphArScan(info: Either[VertexInfo, EdgeInfo], required: StructType,
   }
 
   private def planVertex(v: VertexInfo): Array[InputPartition] = {
-    val n = v.vertexCount(conf)
+    val n = vertexCount
     val cs = v.chunkSize
     idFilter match {
       case Some((_, vid)) =>

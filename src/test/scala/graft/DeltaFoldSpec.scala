@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DoubleType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -58,31 +56,10 @@ class DeltaFoldSpec extends AnyFunSuite {
     base
   }
 
-  /** Jobs `f` launches from this thread (job group), bus drained. */
-  private def jobsOf[T](f: => T): Int = {
-    val sc = spark.sparkContext
-    val group = s"fold-${java.util.UUID.randomUUID()}"
-    val n = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    org.apache.spark.graftspec.Bus.drain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "delta fold job count")
-    try f finally {
-      sc.clearJobGroup()
-      org.apache.spark.graftspec.Bus.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get()
-  }
-
   test("building the folded view launches no Spark job at any log length") {
     for (removes <- Seq(false, true); n <- Seq(1, 5)) {
       val base = staged(n, removes)
-      assert(jobsOf(GraphArMutations.currentEdges(spark, base)) === 0,
+      assert(Jobs.launchedBy(spark)(GraphArMutations.currentEdges(spark, base)) === 0,
         s"$n deltas, removes=$removes")
     }
   }
@@ -93,7 +70,7 @@ class DeltaFoldSpec extends AnyFunSuite {
         val base = staged(n, removes)
         val folded = GraphArMutations.currentEdges(spark, base)
         var rows = 0L
-        val jobs = jobsOf { rows = folded.count() }
+        val jobs = Jobs.launchedBy(spark) { rows = folded.count() }
         assert(rows === (if (removes) 12L else 12L + n), s"$n deltas, removes=$removes")
         jobs
       }
@@ -168,7 +145,7 @@ class DeltaFoldSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$base/vdelta/d0/upserts").schema.map(_.dataType) ===
       Seq(LongType, org.apache.spark.sql.types.StringType, DoubleType))
     var folded: DataFrame = null
-    assert(jobsOf { folded = GraphArMutations.currentVertices(spark, base) } === 0)
+    assert(Jobs.launchedBy(spark) { folded = GraphArMutations.currentVertices(spark, base) } === 0)
     assert(folded.select("id").collect().map(_.getLong(0)).sorted.toSeq ===
       Seq(2L, 10L, 11L, 12L, 13L, 14L))
     intercept[IllegalArgumentException] {
